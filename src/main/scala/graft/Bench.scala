@@ -3,7 +3,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftx.Metrics
 
 /** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
@@ -51,15 +50,8 @@ import org.apache.spark.sql.graftx.Metrics
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = LocalSpark.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    // Static confs silently keep the FIRST JVM value (ADVICE r18): log
-    // the effective codegen-cache size so an ignored setting is visible
-    // in the artifact's stderr, not discovered as a mystery regression.
-    System.err.println("[bench] effective spark.sql.codegen.cache.maxEntries=" +
-      spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    val spark = LocalSpark.session()
     // NonFatal only: after an OutOfMemoryError the JVM's numbers are
     // garbage — better to die loudly than record a plausible-looking
     // artifact from a broken heap (round-9 review).

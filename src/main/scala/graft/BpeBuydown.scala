@@ -85,15 +85,7 @@ object BpeBuydown {
     val targets = sys.env.getOrElse("SPARK_GRAFT_BPE_TARGETS", "256,1024")
       .split(",").map(_.trim.toInt).toSeq
     val out = sys.env.getOrElse("SPARK_GRAFT_BPE_OUT", "bpe_buydown.json")
-    val spark = SparkSession.builder()
-      .appName("graft-bpe-buydown")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     try {
       import graft.operators.Bpe
       import graft.queries.TextQueries

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.core.{Graft, Reducers}
 
 /** Example consumer of the graft.core facade — the hpmr test workloads
@@ -8,11 +7,7 @@ import graft.core.{Graft, Reducers}
   * through the public API. Run: sbt "runMain graft.Demo". */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
     import spark.implicits._
 
     val r = Graft.mapreduceRange[String, Long](

@@ -2,11 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local-session builder both harness mains share — Verify
-  * validates exactly what Bench times, so their sessions must stay
-  * semantically identical (a conf added to one and not the other would
-  * silently benchmark a different plan than the verified one).
+/** The ONE local-session builder: every main (Bench, Verify, the probes,
+  * PlanFormat, Demo) and the test suite build their session here, so a
+  * tool measures, verifies or dumps exactly the session Bench times (a
+  * conf added to one builder and not another would silently benchmark a
+  * different plan than the verified one).
   *
+  *  - local[cpus]: `SPARK_GRAFT_CPUS` if set, else every core of the
+  *    host ([[defaultCpus]]).
   *  - UTC session timezone: the timestamp-normalization contract of
   *    graft.sources.Tables requires it (non-UTC fails fast there).
   *  - nanosAsLong: legacy TIMESTAMP(NANOS) fixtures are unreadable in
@@ -26,40 +29,41 @@ import org.apache.spark.sql.SparkSession
   *    invocation still computes from the parquet inputs. 4096 ≈ an
   *    order above the inventory's distinct codegen units; entries are
   *    class references, so the cost is MBs. A long-lived production
-  *    driver serving a query library would set exactly this. */
+  *    driver serving a query library would set exactly this.
+  *  - AQE coalescing dials stay at Spark's own defaults (OPTIMIZATION_r19.md
+  *    measured the alternatives; the defaults stand), so a cluster
+  *    deployment tunes them through Spark's normal `--conf`. */
 object LocalSpark {
-  def session(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-    // Never take the bypass-merge shuffle write path: it opens (and then
-    // merge-concatenates) one file PER REDUCE PARTITION per map task,
-    // and with shuffle.partitions = cpus every SQL exchange sits under
-    // the 200-partition bypass threshold — measured 100–150 ms of
-    // (user+system) CPU per map task of pure file-stream churn on tiny
-    // iterative stages (graph_pagerank's 7k-row rounds: 1.4–1.9 CPU-s
-    // per round with bypass, 0.2 CPU-s with the serialized unsafe
-    // writer; whole query 10.0 → 4.3 CPU-s). The unsafe writer sorts
-    // partition ids over serialized rows and writes ONE file + index per
-    // task — strictly fewer syscalls at any width; deployments with
-    // > 200-partition shuffles never used bypass in the first place. */
-    .config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "0"))
-    // AQE small-partition coalescing dials (round-19 measurement of the
-    // 8-beats-32-cores inversion, VERDICT r18 #3) — env-overridable for
-    // A/B, defaults = Spark defaults so the bench stays comparable and
-    // nothing is tuned to local[32]; see OPTIMIZATION_r19.md for the
-    // measured matrix and why the defaults stand.
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64MB"))
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1MB"))
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  def defaultCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  def session(cpus: String = defaultCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Never take the bypass-merge shuffle write path: it opens (and then
+      // merge-concatenates) one file PER REDUCE PARTITION per map task,
+      // and with shuffle.partitions = cpus every SQL exchange sits under
+      // the 200-partition bypass threshold — measured 100–150 ms of
+      // (user+system) CPU per map task of pure file-stream churn on tiny
+      // iterative stages (graph_pagerank's 7k-row rounds: 1.4–1.9 CPU-s
+      // per round with bypass, 0.2 CPU-s with the serialized unsafe
+      // writer; whole query 10.0 → 4.3 CPU-s). The unsafe writer sorts
+      // partition ids over serialized rows and writes ONE file + index per
+      // task — strictly fewer syscalls at any width; deployments with
+      // > 200-partition shuffles never used bypass in the first place.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // Static confs silently keep the FIRST JVM value (ADVICE r18): log
+    // the effective codegen-cache size so an ignored setting is visible
+    // in every run's stderr, not discovered as a mystery regression.
+    System.err.println("[graft] effective spark.sql.codegen.cache.maxEntries=" +
+      spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    spark
+  }
 }

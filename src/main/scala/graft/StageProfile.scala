@@ -2,19 +2,17 @@ package graft
 
 import java.util.Locale
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftx.Metrics
 
 /** Per-stage attribution for one declared query — the measurement step
   * of the optimization playbook (guide §1): where do this query's wall
   * and CPU actually go, stage by stage? Runs the query `reps` times
-  * (first rep discarded as warm-up/ingest) and prints each metered rep's
-  * stages: span (the stage's submission→completion elapsed — NOT wall:
-  * spans of CONCURRENT stages overlap, so the printed spanSum can exceed
-  * the rep wall; ADVICE r18), executor CPU, task count, input
-  * records, shuffle read/write records. Sorted by CPU so the hog stage
-  * is on top.
+  * (first rep's table skipped as warm-up/ingest) and prints each rep's
+  * stages from [[Metrics.withStages]] (the collector Bench's CPU numbers
+  * come from): span (submission→completion elapsed — NOT wall: spans of
+  * CONCURRENT stages overlap, so the printed spanSum can exceed the rep
+  * wall), executor CPU, task count, input records, shuffle read/write
+  * records, spill. Sorted by CPU so the hog stage is on top.
   *
   * Run: tools/run_probe.sh graft.StageProfile <query> [reps]
   *   Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS — same session as Bench. */
@@ -23,54 +21,30 @@ object StageProfile {
     val name = args.headOption.getOrElse(sys.error("usage: StageProfile <query> [reps]"))
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalSpark.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    // ADVICE r18: surface the effective STATIC conf (a shared JVM keeps
-    // the first session's value and only warns).
-    System.err.println("[profile] effective spark.sql.codegen.cache.maxEntries=" +
-      spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    val spark = LocalSpark.session()
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
 
-    final case class StageRow(id: Int, name: String, wallMs: Long, cpuMs: Long,
-        tasks: Int, inputRecs: Long, shufReadRecs: Long, shufWriteRecs: Long,
-        spillBytes: Long)
-    val rows = ArrayBuffer.empty[StageRow]
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val m = si.taskMetrics
-        if (m != null) rows.synchronized {
-          rows += StageRow(si.stageId, si.name.linesIterator.next(),
-            (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L),
-            m.executorCpuTime / 1000000L, si.numTasks,
-            m.inputMetrics.recordsRead, m.shuffleReadMetrics.recordsRead,
-            m.shuffleWriteMetrics.recordsWritten, m.diskBytesSpilled)
-        }
-      }
-    }
-    def fmt(r: StageRow): String = String.format(Locale.ROOT,
+    def fmt(r: Metrics.StageRow): String = String.format(Locale.ROOT,
       "%5d %7.2fs %7.2fs %5d %10d %10d %10d %8d  %s",
-      Int.box(r.id), Double.box(r.wallMs / 1e3), Double.box(r.cpuMs / 1e3),
-      Int.box(r.tasks), Long.box(r.inputRecs), Long.box(r.shufReadRecs),
-      Long.box(r.shufWriteRecs), Long.box(r.spillBytes), r.name.take(120))
+      Int.box(r.id), Double.box(r.spanMs / 1e3), Double.box(r.cpuNs / 1e9),
+      Int.box(r.tasks), Long.box(r.inputRecords), Long.box(r.shuffleReadRecords),
+      Long.box(r.shuffleWriteRecords), Long.box(r.spillBytes), r.name.take(120))
 
     for (rep <- 1 to reps) {
-      rows.synchronized(rows.clear())
-      if (rep > 1) spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftx.Metrics.flushListeners(spark.sparkContext)
-      if (rep > 1) spark.sparkContext.removeSparkListener(listener)
-      val snap = rows.synchronized(rows.toVector)
-      println(f"%n=== $name rep $rep wall=$wall%.3fs stages=${snap.size} " +
-        f"cpuSum=${snap.map(_.cpuMs).sum / 1e3}%.3fs " +
-        f"stageSpanSum=${snap.map(_.wallMs).sum / 1e3}%.3fs " +
+      var wall = 0.0
+      val (_, rows, drained) = Metrics.withStages(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        wall = (System.nanoTime() - t0) / 1e9
+      }
+      println(f"%n=== $name rep $rep wall=$wall%.3fs stages=${rows.size} " +
+        f"cpuSum=${rows.map(_.cpuNs).sum / 1e9}%.3fs " +
+        f"stageSpanSum=${rows.map(_.spanMs).sum / 1e3}%.3fs " +
+        (if (drained) "" else "INCOMPLETE (listener bus not drained) ") +
         "(concurrent stages overlap; spanSum can exceed wall) ===")
       if (rep > 1) {
         println("stage    span     cpu  tasks      input   shufRead  shufWrite    spill  name")
-        snap.sortBy(-_.cpuMs).take(30).foreach(r => println(fmt(r)))
+        rows.sortBy(-_.cpuNs).take(30).foreach(r => println(fmt(r)))
       }
       org.apache.spark.sql.graftx.Sessions.releaseSnapshots()
     }

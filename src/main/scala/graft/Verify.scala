@@ -5,9 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalSpark.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     // Wipe the output dir first: overwrite mode only deletes once a
     // query's write STARTS, so a query failing at analysis would leave a
     // previous run's parquet in place and the downstream compare would

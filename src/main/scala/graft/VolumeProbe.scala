@@ -91,16 +91,9 @@ object VolumeProbe {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_VOL_FACTOR", "100").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_VOL_OUT", "VOLPROBE_r07.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // see class doc
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.defaultCpus
+    val spark = LocalSpark.session(cpus)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // see class doc
 
     // Optional comma-separated query-name filter for iterating on one
     // entry without paying the full ~25-min probe. The canonical 100×

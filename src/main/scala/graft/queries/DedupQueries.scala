@@ -41,10 +41,10 @@ object DedupQueries {
     * several subtrees (candidate self-join, exact rescoring sides, the
     * per-doc size table), and Catalyst instantiates the FULL scan +
     * tokenize + shingle lineage per reference — dedup_jaccard_on_lsh
-    * executed the corpus scan and the (interpreted — see the HofProbe
-    * measurement) higher-order shingle pipeline SIX times per run, the
-    * dominant cost at the 10× scale probe. The snapshot computes it once
-    * and every subtree reads the cached narrow (doc_id, s) rows — the
+    * executed the corpus scan and the higher-order shingle pipeline SIX
+    * times per run, the dominant cost at the 10× scale probe. The
+    * snapshot computes it once and every subtree reads the cached narrow
+    * (doc_id, s) rows — the
     * "materialize the signature/shingle table once" shape every
     * production dedup pipeline uses at 100 TB (MEMORY_AND_DISK, so big
     * corpora spill rather than OOM; cleanup is ContextCleaner-driven once

@@ -1,7 +1,5 @@
 package org.apache.spark.sql.graftx
 
-import java.util.concurrent.atomic.AtomicLong
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
@@ -47,11 +45,40 @@ object Metrics {
       diskSpilledBytes: Long, joinOutputRows: Long = 0L,
       incomplete: Boolean = false)
 
-  /** Runs `body`, returning (result, total executor CPU seconds of all
-    * stages completed during it). */
-  def withCpuTime[T](sc: SparkContext)(body: => T): (T, Double) = {
-    val (r, w) = withTaskWork(sc)(body)
-    (r, w.cpuSec)
+  /** One completed stage, as the listener saw it: `spanMs` is the
+    * stage's submission→completion elapsed (-1 if Spark recorded no
+    * times) — NOT wall: spans of CONCURRENT stages overlap, so a block's
+    * span sum can exceed its wall (ADVICE r18). `cpuNs` is executor CPU. */
+  final case class StageRow(id: Int, name: String, spanMs: Long, cpuNs: Long,
+      tasks: Int, inputRecords: Long, shuffleReadRecords: Long,
+      shuffleWriteRecords: Long, spillBytes: Long)
+
+  /** Runs `body`, returning (result, one [[StageRow]] per stage completed
+    * during it in completion order, drained) — `drained` is false when
+    * the post-body listener-bus drain timed out, so the rows may be
+    * missing late stages (see [[flushListeners]]). The one stage
+    * collector: [[withTaskWork]] sums these rows, StageProfile prints
+    * them. */
+  def withStages[T](sc: SparkContext)(body: => T): (T, Seq[StageRow], Boolean) = {
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        val m = si.taskMetrics
+        if (m != null) rows.add(StageRow(si.stageId,
+          si.name.linesIterator.nextOption().getOrElse(""),
+          (for { s <- si.submissionTime; c <- si.completionTime } yield c - s).getOrElse(-1L),
+          m.executorCpuTime, si.numTasks, m.inputMetrics.recordsRead,
+          m.shuffleReadMetrics.recordsRead, m.shuffleWriteMetrics.recordsWritten,
+          m.diskBytesSpilled))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      val drained = flushListeners(sc)
+      (result, rows.asScala.toSeq, drained)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Runs `body`, returning (result, aggregate [[TaskWork]] of all stages
@@ -59,26 +86,9 @@ object Metrics {
     * live on plan nodes, not task metrics; use the [[SparkSession]]
     * overload to capture them. */
   def withTaskWork[T](sc: SparkContext)(body: => T): (T, TaskWork) = {
-    val cpuNs = new AtomicLong
-    val shuffleRecs = new AtomicLong
-    val spilled = new AtomicLong
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime)
-          shuffleRecs.addAndGet(m.shuffleReadMetrics.recordsRead)
-          spilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val result = body
-      val drained = flushListeners(sc)
-      (result, TaskWork(cpuNs.get / 1e9, shuffleRecs.get, spilled.get,
-        incomplete = !drained))
-    } finally sc.removeSparkListener(listener)
+    val (result, rows, drained) = withStages(sc)(body)
+    (result, TaskWork(rows.map(_.cpuNs).sum / 1e9, rows.map(_.shuffleReadRecords).sum,
+      rows.map(_.spillBytes).sum, incomplete = !drained))
   }
 
   /** Drains the listener bus so async stage/execution events posted by

@@ -14,14 +14,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * build instead of surfacing a round later in review.
   *
   * Deliberately a pure text test — no SparkSession — so it costs
-  * milliseconds and cannot flake; `sbt "runMain graft.PlanDump"` is the
-  * fix when it fires.
+  * milliseconds and cannot flake; `sbt "runMain graft.PlanFormat PLANS.md"`
+  * is the fix when it fires.
   */
 class PlansFreshnessSpec extends AnyFunSuite {
 
   test("PLANS.md carries exactly one section per declared query") {
     val path = Paths.get("PLANS.md")
-    assert(Files.exists(path), "PLANS.md missing — run graft.PlanDump")
+    assert(Files.exists(path), "PLANS.md missing — regenerate with: sbt \"runMain graft.PlanFormat PLANS.md\"")
     val headers = Files.readString(path).linesIterator
       .filter(_.startsWith("## ")).map(_.stripPrefix("## ").trim).toSeq
     val dupes = headers.groupBy(identity).collect { case (n, hs) if hs.size > 1 => n }
@@ -33,7 +33,7 @@ class PlansFreshnessSpec extends AnyFunSuite {
     assert(missing.isEmpty && stale.isEmpty,
       s"PLANS.md is stale — missing sections: ${missing.toSeq.sorted}; " +
         s"sections for undeclared queries: ${stale.toSeq.sorted}. " +
-        "Regenerate with: sbt \"runMain graft.PlanDump\"")
+        "Regenerate with: sbt \"runMain graft.PlanFormat PLANS.md\"")
   }
 
   test("no PLANS.md section records a failed plan") {

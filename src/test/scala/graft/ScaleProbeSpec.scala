@@ -480,7 +480,7 @@ class ScaleProbeSpec extends SparkSpec with BeforeAndAfterAll {
         // stall pathology inflates WALL and — under memory-bandwidth
         // contention — even thread-CPU time (the identical clusters run
         // measured 10 s and 500 s executor-CPU in adjacent sessions,
-        // while ScaleDebug showed the same per-round plan both times). A
+        // with the same per-round plan both times). A
         // genuine quadratic regression is deterministic work and fails
         // every attempt; a host episode does not survive two attempts
         // minutes apart.

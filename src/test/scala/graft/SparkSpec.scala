@@ -4,18 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM, forked by sbt). */
+/** Shared local session for all specs (one JVM, forked by sbt): the
+  * harness session from [[LocalSpark]] at 4 cores. The warehouse dir is
+  * a static conf, so it goes in as a system property before the build. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  spark.sparkContext.setLogLevel("ERROR")
+  lazy val spark: SparkSession = {
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft-wh").toString
+    val s = LocalSpark.session("4")
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
 
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -12,7 +12,9 @@
 # absorbs the cold rep exactly as the bench contract documents.
 #
 # Usage: tools/bench_hermetic.sh <out.json> [sfDir]
-#   env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_REPS (default 3)
+#   env: SPARK_GRAFT_CPUS (default: every host core, graft.LocalSpark),
+#   SPARK_GRAFT_BENCH_REPS (default 3), SPARK_DRIVER_MEM (default: half
+#   of MemTotal clamped to 2–8g, as tools/run_probe.sh)
 set -eu
 REPO_ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 if [ $# -lt 1 ]; then
@@ -38,14 +40,14 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+HEAP_DEFAULT="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
 SPARK_GRAFT_SF_DIR="$SF" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_BENCH_REPS="${SPARK_GRAFT_BENCH_REPS:-3}" \
 SPARK_GRAFT_BENCH_OUT="$OUT" \
 java $ADD_OPENS \
   -XX:ReservedCodeCacheSize=512m \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-$HEAP_DEFAULT}" \
   -cp "$CLASSES:/opt/spark/jars/*" \
   graft.Bench
 echo "hermetic bench written to $OUT (scratch dir $WORK removed)" >&2

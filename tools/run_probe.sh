@@ -3,7 +3,10 @@
 # graft.Bench) — run inside tmux: an sbt-forked run dies with the
 # sandbox's background-task timeout, and sbt must not compile while one
 # of these JVMs is mid-flight (lazy classfile loads would mix versions).
-# Usage: tools/run_probe.sh <MainClass> [env pre-set by caller]
+# Usage: tools/run_probe.sh <MainClass> [args...]  (env pre-set by caller)
+# Heap: $SPARK_DRIVER_MEM if set, else half of MemTotal clamped to 2–8g
+# (the test command's SPARK_DRIVER_MEM rule), so on a small host the JVM
+# fails with a Java OOM instead of being taken by the kernel OOM killer.
 set -eu
 if [ $# -lt 1 ]; then
   echo "usage: $0 <MainClass>  (env: SPARK_GRAFT_SF_DIR etc. pre-set by caller)" >&2
@@ -27,9 +30,10 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+HEAP_DEFAULT="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
 exec java $ADD_OPENS \
   -XX:ReservedCodeCacheSize=512m \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-$HEAP_DEFAULT}" \
   -cp "$CLASSES:/opt/spark/jars/*" \
   "$MAIN" "$@"
